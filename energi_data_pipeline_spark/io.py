@@ -11,17 +11,19 @@ formats:
   the reference's conflict behavior for a single writer.
 * ordered CSV export with header (gold_aggr.py:234-254).
 
-At 100 TB the anti-join reads only the destination's key column
-(column pruning) over partition-pruned files (the caller passes a
-watermark so only recent partitions are scanned); the appended data
-is written date-partitioned so downstream cursor predicates prune.
+The anti-join reads only the destination's key column (column
+pruning), but over every file: the medallion's tables are not
+partitioned and their INT96 timestamps carry no min/max statistics
+(see :func:`max_watermark`).
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .session import tune
 
@@ -377,9 +379,49 @@ def table_path(warehouse: str, layer: str, name: str) -> str:
     return os.path.join(warehouse, layer, name)
 
 
+def _data_files(path: str) -> frozenset:
+    """(relative path, bytes, mtime ns) of every data file under a
+    table directory; empty when the directory is absent.  Files and
+    directories whose names start with ``.`` (checksums) or ``_``
+    (``_SUCCESS``, staging), except ``_x=v`` partition directories,
+    are skipped, the rule Spark's own file listing applies."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for f in files:
+            if not _hidden(f):
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_size,
+                            st.st_mtime_ns))
+    return frozenset(out)
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+#: DataFrame -> (table path, data files) of the layer-table snapshot
+#: it reads, so key statistics recorded against a file set apply to it
+_SNAPSHOTS = weakref.WeakKeyDictionary()
+
+#: table path -> (key column, data files, rows, min, max): the single
+#: key's statistics, as merged from this process's own commits
+#: (:func:`insert_if_absent`) or seeded by one aggregate
+#: (:func:`key_stats`), valid while the table holds exactly those files
+_KEY_STATS: dict[str, tuple] = {}
+
+
 def read_layer_table(spark: SparkSession, warehouse: str, layer: str,
-                     name: str) -> DataFrame | None:
-    """Read a managed layer table; None if it does not exist yet.
+                     name: str, schema=None) -> DataFrame | None:
+    """Read a managed layer table; None if its directory is absent or
+    holds no data files.  Any other failure (a corrupt footer, an
+    unreadable file) raises: a table that exists but cannot be read
+    must never look empty, or :func:`insert_if_absent` would insert
+    its whole batch again.
+
+    ``schema`` pins the read schema, so no footer is read to infer
+    it: planning the read runs no Spark job.
 
     Repairs a hard-killed :func:`publish_atomic` swap first (the
     previous snapshot renamed back into place), so a crash between
@@ -387,26 +429,77 @@ def read_layer_table(spark: SparkSession, warehouse: str, layer: str,
     old snapshot, never a missing table."""
     path = table_path(warehouse, layer, name)
     recover_atomic(path)
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
+    if not _data_files(path):
         return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     # segment-append tables carry the internal _bid partition column
     # (append_batch_segment's idempotency key) — never part of the
     # logical schema
-    return df.drop("_bid") if "_bid" in df.columns else df
+    if "_bid" in df.columns:
+        df = df.drop("_bid")
+    # listed after Spark listed the table for the read, so on an
+    # append-only table these files include every file the frame reads
+    _SNAPSHOTS[df] = (path, _data_files(path))
+    return df
+
+
+def _recorded(df: DataFrame | None, col: str):
+    """(rows, min, max) recorded for the exact file set ``df`` reads;
+    (0, None, None) for an absent table; None when nothing applies."""
+    if df is None:
+        return 0, None, None
+    snap = _SNAPSHOTS.get(df)
+    if snap is None:
+        return None
+    rec = _KEY_STATS.get(snap[0])
+    if rec is not None and rec[0] == col and rec[1] == snap[1]:
+        return rec[2:]
+    return None
+
+
+def _record(path: str, col: str, files: frozenset, stats) -> None:
+    if len(_KEY_STATS) > 256:  # tables of finished runs: drop, reseed
+        _KEY_STATS.clear()
+    _KEY_STATS[path] = (col, files, *stats)
+
+
+def key_stats(df: DataFrame, col: str) -> tuple:
+    """``SELECT COUNT(*), MIN(col), MAX(col)`` of a layer table read
+    by :func:`read_layer_table`.
+
+    Served without a Spark job from the statistics recorded for the
+    table while its file set is the one ``df`` reads; otherwise one
+    aggregate, which reseeds the record.  A record merges only rows
+    this process saw written, so a file another writer added can
+    only make it miss, and it never overstates the table."""
+    hit = _recorded(df, col)
+    if hit is not None:
+        return hit
+    row = df.agg(F.count(F.lit(1)), F.min(col), F.max(col)).first()
+    stats = (row[0], row[1], row[2])
+    snap = _SNAPSHOTS.get(df)
+    if snap is not None:
+        _record(snap[0], col, snap[1], stats)
+    return stats
 
 
 def max_watermark(df: DataFrame | None, col: str, default):
     """``SELECT COALESCE(MAX(col), default)`` — the reference's
     self-watermarking cursor (silver_transform.py:54-58,
-    gold_aggr.py:59-63).  Single-stage partial+final max; at scale
-    this reads only parquet footers' column statistics when the
-    table is append-ordered."""
+    gold_aggr.py:59-63), from :func:`key_stats`.
+
+    Without a record this is a full scan of the key column: the
+    medallion's timestamps are stored as INT96, which carries no
+    min/max statistics (pyarrow shows ``statistics=None``), so
+    neither the footers nor a pushed-down predicate can skip data.
+    They stay INT96 because DuckDB 1.0, the reference's engine,
+    reads INT64 UTC-adjusted timestamps as TIMESTAMP WITH TIME ZONE
+    and would then compare them against naive values."""
     if df is None:
         return default
-    row = df.agg(F.coalesce(F.max(col), F.lit(default)).alias("wm")).first()
-    return row["wm"] if row is not None else default
+    hi = key_stats(df, col)[2]
+    return default if hi is None else hi
 
 
 def anti_join_new(new_df: DataFrame, existing: DataFrame | None,
@@ -428,14 +521,39 @@ def anti_join_new(new_df: DataFrame, existing: DataFrame | None,
 def insert_if_absent(spark: SparkSession, new_df: DataFrame, warehouse: str,
                      layer: str, name: str, keys: list[str],
                      partition_by: list[str] | None = None) -> None:
-    """Idempotent append: anti-join against destination, append rest."""
+    """Idempotent append: anti-join against destination, append rest.
+
+    The destination is read with the key-only schema of ``new_df``.
+    With a single key, the written rows' count, min and max are
+    observed during the write and merged into the table's recorded
+    key statistics (see :func:`key_stats`)."""
     path = table_path(warehouse, layer, name)
-    existing = read_layer_table(spark, warehouse, layer, name)
+    existing = read_layer_table(
+        spark, warehouse, layer, name,
+        schema=StructType([new_df.schema[k] for k in keys]))
     to_write = anti_join_new(new_df, existing, keys)
+    prior = _recorded(existing, keys[0]) if len(keys) == 1 else None
+    if prior is not None:
+        obs = Observation()
+        to_write = to_write.observe(
+            obs, F.count(F.lit(1)).alias("n"),
+            F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi"))
     writer = to_write.write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+    if prior is not None:
+        got = obs.get
+        _record(path, keys[0], _data_files(path),
+                (prior[0] + got["n"], _pick(min, prior[1], got["lo"]),
+                 _pick(max, prior[2], got["hi"])))
+
+
+def _pick(pick, a, b):
+    """``pick(a, b)`` ignoring NULLs, as SQL's MIN/MAX do."""
+    if a is None or b is None:
+        return b if a is None else a
+    return pick(a, b)
 
 
 def append_batch_segment(spark: SparkSession, df: DataFrame,

@@ -2,9 +2,11 @@
 
 Re-expresses silver_transform.py:61-106 as pure DataFrame
 transforms.  Both builders take an optional watermark and filter
-``ts > watermark`` — Catalyst pushes that predicate into the
-parquet scan, which at 100 TB (fact partitioned by date) becomes
-partition pruning: an incremental run touches only new files.
+``ts > watermark``.  Catalyst pushes that predicate into the parquet
+scan, but it skips nothing there: no table is partitioned, and the
+timestamps are stored as INT96, which carries no min/max statistics
+(io.max_watermark says why they stay INT96), so an incremental run
+still reads every bronze file.
 """
 
 from __future__ import annotations

@@ -9,9 +9,17 @@ reads incrementally from its own destination watermark
 (COALESCE(MAX(time_id), epoch)) — the reference's self-watermarking
 protocol, no external state store.
 
-Scale: fact and gold tables are date-partitioned so the watermark
-predicate prunes partitions; dim_time broadcasts; the gold window
-runs partitioned-by-day with warm-up replay (operators.windows).
+Reads pin each table's schema (derived once from the builders, see
+:func:`layer_schema`), so planning a read runs no Spark job, and the
+watermarks and silver's stats line come from the key statistics
+``insert_if_absent`` records at each commit (io.key_stats).
+
+Scale: no table is partitioned, and the watermark predicate prunes
+neither files nor row groups: the timestamps are stored as INT96,
+which carries no min/max statistics, so every scan reads the whole
+key column (io.max_watermark says why they stay INT96).  dim_time
+broadcasts; ``scaled=True`` runs the gold window partitioned by day
+with warm-up replay (operators.windows).
 """
 
 from __future__ import annotations
@@ -19,29 +27,59 @@ from __future__ import annotations
 import time
 from datetime import datetime
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from ..io import (export_csv, insert_if_absent, max_watermark,
+from ..io import (export_csv, insert_if_absent, key_stats, max_watermark,
                   read_layer_table)
 from ..operators.gold import EXPORT_COLUMNS, build_gold
 from ..operators.silver import build_dim_time, build_fact
-from ..sources.normalize import records_to_bronze
+from ..sources.normalize import BRONZE_FULL_SCHEMA, records_to_bronze
 from ..sources.rest import INITIAL_CURSOR, format_cursor
 
 EPOCH = datetime(1970, 1, 1)
 
+#: (layer, table) -> schema, derived on first use by layer_schema
+_SCHEMAS: dict[tuple[str, str], StructType] = {}
+
+
+def layer_schema(spark: SparkSession, layer: str,
+                 name: str) -> StructType:
+    """The schema of one of the pipeline's four tables, derived once
+    from the pipeline's own builders over an empty bronze frame, so
+    it cannot drift from what the builders write."""
+    if not _SCHEMAS:
+        bronze = spark.createDataFrame([], BRONZE_FULL_SCHEMA)
+        fact = build_fact(bronze)
+        dim = build_dim_time(bronze)
+        _SCHEMAS.update({
+            ("bronze", "power_system_raw"): bronze.schema,
+            ("silver", "dim_time"): dim.schema,
+            ("silver", "fact_power_system"): fact.schema,
+            ("gold", "power_system_5min_avg"): build_gold(fact, dim).schema,
+        })
+    return _SCHEMAS[layer, name]
+
+
+def read_pinned(spark: SparkSession, warehouse: str, layer: str,
+                name: str) -> DataFrame | None:
+    """``read_layer_table`` with the table's :func:`layer_schema`."""
+    return read_layer_table(spark, warehouse, layer, name,
+                            schema=layer_schema(spark, layer, name))
+
 
 def _layer_io(table_format: str):
     """(read_layer_table, insert_if_absent) for the chosen storage
-    format.  ``"parquet"`` (default): the rename-based layout —
-    correct on any single POSIX filesystem, which is the reference's
-    own scope.  ``"commitlog"``: the put-if-absent commit-log format
+    format.  ``"parquet"`` (default): the rename-based layout, read
+    with pinned schemas (:func:`read_pinned`) — correct on any single
+    POSIX filesystem, which is the reference's own scope.
+    ``"commitlog"``: the put-if-absent commit-log format
     (commitlog.CommitLogTable) for object-store deployments where
     atomic rename does not exist; same layer/table addressing, same
     idempotent-append semantics, plus lock-free multi-writer safety
     (r07 verdict #5)."""
     if table_format == "parquet":
-        return read_layer_table, insert_if_absent
+        return read_pinned, insert_if_absent
     if table_format == "commitlog":
         from .. import commitlog
 
@@ -90,13 +128,9 @@ def run_silver(spark: SparkSession, warehouse: str,
     insert_t(spark, fact, warehouse, "silver", "fact_power_system",
              keys=["time_id"])
 
-    stats = read_t(spark, warehouse, "silver",
-                   "fact_power_system").agg(
-        F.count(F.lit(1)).alias("total"),
-        F.min("time_id").alias("earliest"),
-        F.max("time_id").alias("latest")).first()
-    print(f"silver: {stats['total']} facts, "
-          f"{stats['earliest']} .. {stats['latest']}")
+    total, earliest, latest = key_stats(
+        read_t(spark, warehouse, "silver", "fact_power_system"), "time_id")
+    print(f"silver: {total} facts, {earliest} .. {latest}")
 
 
 def run_gold(spark: SparkSession, warehouse: str,

@@ -16,7 +16,9 @@ import json
 import re
 from datetime import datetime
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (DoubleType, MapType, StringType,
                                StructField, StructType, TimestampType)
 
@@ -78,9 +80,10 @@ def batch_load_id(records: list[dict]) -> str:
     return hashlib.md5(payload.encode()).hexdigest()[:16]
 
 
-def records_to_bronze(spark: SparkSession, records: list[dict],
-                      load_id: str | None = None) -> DataFrame:
-    """API JSON dicts -> typed, snake_cased bronze DataFrame.
+def normalize_records(records: list[dict],
+                      load_id: str | None = None) -> list[dict]:
+    """API JSON dicts -> bronze row dicts keyed by
+    BRONZE_FULL_SCHEMA's column names (pure Python, no Spark).
 
     Timestamps arrive as ISO strings with optional Z suffix and are
     truncated to minute resolution exactly like
@@ -115,7 +118,33 @@ def records_to_bronze(spark: SparkSession, records: list[dict],
         out["_extras"] = extras or None
         out["_load_id"] = lid
         normalized.append(out)
-    return spark.createDataFrame(normalized, BRONZE_FULL_SCHEMA)
+    return normalized
+
+
+def records_to_bronze(spark: SparkSession, records: list[dict],
+                      load_id: str | None = None) -> DataFrame:
+    """API JSON dicts -> typed, snake_cased bronze DataFrame
+    (:func:`normalize_records`'s rows).
+
+    The batch is built as one ``pyarrow.Table``, which Spark plans as
+    an in-driver local relation: no action on it starts Python-worker
+    tasks, as a frame made from a list of rows does.  Naive
+    timestamps are converted with ``TimestampType().toInternal``, the
+    conversion Spark applies to a list of rows (it reads a naive
+    datetime in the process's local time zone), so the stored
+    instants equal that path's in every process time zone.
+    """
+    rows = normalize_records(records, load_id)
+    # Spark's Arrow form of the schema: the timestamp column is
+    # UTC-zoned, so it carries instants, which Spark takes as they are
+    arrow = to_arrow_schema(BRONZE_FULL_SCHEMA)
+    to_micros = TimestampType().toInternal
+    columns = [pa.array([to_micros(r["minutes1_utc"]) for r in rows],
+                        arrow.field("minutes1_utc").type)]
+    columns += [pa.array([r[f.name] for r in rows], f.type)
+                for f in list(arrow)[1:]]
+    table = pa.Table.from_arrays(columns, schema=arrow)
+    return spark.createDataFrame(table, BRONZE_FULL_SCHEMA)
 
 
 def normalize_columns(df: DataFrame) -> DataFrame:

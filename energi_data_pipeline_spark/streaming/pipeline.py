@@ -24,10 +24,10 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import (insert_if_absent, max_watermark, read_layer_table,
-                  table_path)
+from ..io import insert_if_absent, max_watermark, table_path
 from ..operators.gold import build_gold
 from ..operators.silver import build_dim_time, build_fact
+from ..pipelines.medallion import layer_schema, read_pinned
 
 EPOCH = datetime(1970, 1, 1)
 
@@ -36,13 +36,13 @@ def process_batch(spark: SparkSession, warehouse: str,
                   bronze_batch: DataFrame) -> None:
     """One micro-batch: silver upsert then gold window + trim.
 
-    Identical logic to pipelines.medallion but driven by the stream;
-    watermarks still come from the destination tables, so replays
-    (checkpoint recovery) are idempotent — the anti-join drops rows
-    a half-finished previous batch already wrote.
+    Identical logic to pipelines.medallion but driven by the stream,
+    with the same pinned-schema reads and watermarks; watermarks
+    still come from the destination tables, so replays (checkpoint
+    recovery) are idempotent — the anti-join drops rows a
+    half-finished previous batch already wrote.
     """
-    fact_dst = read_layer_table(spark, warehouse, "silver",
-                                "fact_power_system")
+    fact_dst = read_pinned(spark, warehouse, "silver", "fact_power_system")
     wm = max_watermark(fact_dst, "time_id", EPOCH)
     insert_if_absent(spark, build_dim_time(bronze_batch, watermark=wm),
                      warehouse, "silver", "dim_time", keys=["time_id"])
@@ -50,10 +50,9 @@ def process_batch(spark: SparkSession, warehouse: str,
                      warehouse, "silver", "fact_power_system",
                      keys=["time_id"])
 
-    fact = read_layer_table(spark, warehouse, "silver", "fact_power_system")
-    dim = read_layer_table(spark, warehouse, "silver", "dim_time")
-    gold_dst = read_layer_table(spark, warehouse, "gold",
-                                "power_system_5min_avg")
+    fact = read_pinned(spark, warehouse, "silver", "fact_power_system")
+    dim = read_pinned(spark, warehouse, "silver", "dim_time")
+    gold_dst = read_pinned(spark, warehouse, "gold", "power_system_5min_avg")
     gwm = max_watermark(gold_dst, "time_id", EPOCH)
     gold = build_gold(fact, dim, watermark=gwm)
     insert_if_absent(spark, gold, warehouse, "gold",
@@ -69,8 +68,8 @@ def run_streaming(spark: SparkSession, warehouse: str,
     bronze files as the ingest lands them.
     """
     bronze_path = table_path(warehouse, "bronze", "power_system_raw")
-    schema = spark.read.parquet(bronze_path).schema
-    stream = spark.readStream.schema(schema).parquet(bronze_path)
+    stream = spark.readStream.schema(
+        layer_schema(spark, "bronze", "power_system_raw")).parquet(bronze_path)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         process_batch(batch_df.sparkSession, warehouse, batch_df)
