@@ -71,9 +71,17 @@ def curation_pipeline(spark, sf_dir):
     corpus scans + two md5 passes + a broadcast build) collapses to
     ONE groupBy(content_key).min aggregation — 4 -> 3 distinct
     parquet scans in the plan (quality leg, exact leg, the LSH leg's
-    cached base; plans/r16/curation_pipeline_*), with the LSH leg's
-    sharing already handled by CacheManager (its InMemoryRelations
-    are referenced by every band without re-scanning)."""
+    cached base; plans/r16/curation_pipeline_*).
+
+    The LSH leg reads the corpus's ONE memoized pair table
+    (:func:`dedup.dedup_minhash_lsh_pairs`): this entry's action
+    materializes it, and every later near-dup consumer of the same
+    corpus in the session — ``curation_cluster_representatives``'
+    connected components above all — scans the cached pairs instead
+    of re-planning and re-running the banded join.  CacheManager
+    plan matching alone did not give that: it shared the signature
+    caches, but each consumer still rebuilt the pair plan and ran
+    its jobs."""
     quality = REGISTRY["text_quality_score"].fn(spark, sf_dir) \
         .filter(F.col("passes_quality"))
     d = t(spark, sf_dir, "documents")
@@ -954,9 +962,10 @@ _LINK_SQL = "0.5 + 0.5 * {m} / (1 + abs({m}))"
 _FEAT_SCHEMA = ("doc_id bigint, source string, y double, "
                 "xs array<double>")
 
-#: (session, corpus-file identity) -> persisted dense-feature
-#: DataFrame; see _dense_features for why object identity (not plan
-#: equality) is the reuse contract between trainer and gate.
+#: io.memo_persisted memo of the persisted dense-feature DataFrame
+#: per (session, corpus-file identity); see _dense_features for why
+#: object identity (not plan equality) is the reuse contract between
+#: trainer and gate.
 _DENSE_FEAT_MEMO: dict = {}
 
 
@@ -1052,70 +1061,42 @@ def _dense_features(spark, sf_dir):
     splits than cores and this path is a no-op (repartition only
     ever runs when the input has fewer partitions than the target).
 
-    Memoized per (session, corpus file identity): the trainer and
-    the gate both call this, and the gate's scoring pass must reuse
-    the TRAINER's persisted feature stage.  Relying on CacheManager
+    Memoized per (session, corpus file identity) by
+    :func:`io.memo_persisted`: the trainer and the gate both call
+    this, and the gate's scoring pass must reuse the TRAINER's
+    persisted feature stage.  Relying on CacheManager
     sameResult-matching two separately-built mapInPandas plans is
     fragile (each embeds its own pickled python function — plan
     canonicalization across pickles is not guaranteed), so the memo
     returns the SAME DataFrame object instead of an equal plan."""
     import os
 
-    from pyspark import StorageLevel
-
-    from ..io import (adaptive_cache_level, file_memo_key,
+    from ..io import (adaptive_cache_level, memo_persisted,
                       parquet_row_count)
 
     corpus = os.path.join(sf_dir, "documents.parquet")
-    key = file_memo_key(spark, corpus)
-    n_docs = parquet_row_count(corpus)
-    # dense row = (D+1)-double vector + id/source/label: the level
-    # is corpus-adaptive like _tfidf_w's (r14 verdict #2 — memory
-    # while it fits the heap-fraction budget, DISK_ONLY past it)
-    level = adaptive_cache_level(spark, n_docs * (D_FEATS + 6) * 9)
-    hit = _DENSE_FEAT_MEMO.get(key)
-    if hit is not None:
-        # a spark.catalog.clearCache() (bench drops caches between
-        # runs) deregisters the persist but the memo keeps handing
-        # back the same DataFrame — re-assert, or the multi-branch
-        # GD chain re-runs the Arrow kernel once per branch
-        # (measured 1.35s -> 2.15s in the first r10 capture)
-        if hit.storageLevel == StorageLevel.NONE:
-            hit.persist(level)
-        return hit
-    d = t(spark, sf_dir, "documents").select("doc_id", "source",
-                                             "text")
-    target = max(1, min(spark.sparkContext.defaultParallelism,
-                        -(-n_docs // 1000)))
-    if d.rdd.getNumPartitions() < target:
-        d = d.repartition(target)
-    fxv = (d.mapInPandas(_feat_batches, _FEAT_SCHEMA)
-           .persist(level))
-    # evictions UNPERSIST: a dropped entry's DISK_ONLY blocks would
-    # otherwise stay registered in the CacheManager for the session's
-    # life with no reachable handle.  Same-session same-path entries
-    # with a different file identity (corpus rewritten in place) are
-    # evicted eagerly for the same reason.
-    stale = [k for k in _DENSE_FEAT_MEMO
-             if k[:3] == key[:3] and k != key]
-    # overflow: evict oldest-inserted first, never a full flush — a
-    # flush unpersists live sessions' hot entries and the next
-    # trainer/gate pair re-runs the Arrow feature kernel, the exact
-    # cost the memo exists to avoid (round-10 ADVICE).  dict
-    # preserves insertion order; dropping from the front is LRU-by-
-    # insertion, good enough for a cache whose hits are clustered
-    # within a session.
-    overflow = len(_DENSE_FEAT_MEMO) - 32
-    if overflow > 0:
-        stale += [k for k in list(_DENSE_FEAT_MEMO)[:overflow]
-                  if k not in stale]
-    for k in stale:
-        try:
-            _DENSE_FEAT_MEMO.pop(k).unpersist()
-        except Exception:
-            pass  # a stopped session's handle: nothing to release
-    _DENSE_FEAT_MEMO[key] = fxv
-    return fxv
+
+    def build():
+        n_docs = parquet_row_count(corpus)
+        # dense row = (D+1)-double vector + id/source/label: the
+        # level is corpus-adaptive like _tfidf_w's (r14 verdict #2 —
+        # memory while it fits the heap-fraction budget, DISK_ONLY
+        # past it)
+        level = adaptive_cache_level(spark, n_docs * (D_FEATS + 6) * 9)
+        d = t(spark, sf_dir, "documents").select("doc_id", "source",
+                                                 "text")
+        target = max(1, min(spark.sparkContext.defaultParallelism,
+                            -(-n_docs // 1000)))
+        if d.rdd.getNumPartitions() < target:
+            d = d.repartition(target)
+        return [d.mapInPandas(_feat_batches, _FEAT_SCHEMA)
+                .persist(level)]
+
+    # a spark.catalog.clearCache() between runs re-persists on the
+    # next hit — else the multi-branch GD chain re-runs the Arrow
+    # kernel once per branch (measured 1.35s -> 2.15s in the first
+    # r10 capture)
+    return memo_persisted(_DENSE_FEAT_MEMO, spark, corpus, build)
 
 
 def _dense_features_exprs(spark, sf_dir):

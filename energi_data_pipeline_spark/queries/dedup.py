@@ -23,7 +23,7 @@ from pyspark.sql import Window, functions as F
 from ..functions.hashing import (MERSENNE_P, base_hashes,
                                  minhash_from_hashes, minhash_seed,
                                  stable_hash64)
-from ..io import spread
+from ..io import memo_persisted, spread
 from . import query
 from .core import t
 from .text import TOKENS_SQL, tokens_col
@@ -244,6 +244,13 @@ def dedup_minhash_signature(spark, sf_dir):
     split into the shingle lambda (one split per element access) and
     the md5 pass into all 8 minhash columns (8 md5 passes per doc) —
     measured 7x slower at sf0.1."""
+    return _signature(spark, sf_dir)[-1]
+
+
+def _signature(spark, sf_dir) -> list:
+    """[token barrier, base-hash barrier, signature] of
+    :func:`dedup_minhash_signature` — the barriers exposed so the
+    pair-table memo can restore them before the table itself."""
     nh, _ = minhash_params(docs_corpus_size(sf_dir))
     d = spread(t(spark, sf_dir, "documents"))
     toks = d.select(
@@ -253,11 +260,11 @@ def dedup_minhash_signature(spark, sf_dir):
         base_hashes(shingles_from_tokens(F.col("tk"))).alias("hl"),
     ).cache()
     hashed.count()
-    return hashed.select(
+    return [toks, hashed, hashed.select(
         "doc_id",
         *[minhash_from_hashes(F.col("hl"), k).alias(f"mh{k}")
           for k in range(nh)],
-    )
+    )]
 
 
 # ------------------------------------------------------ minhash-LSH
@@ -311,12 +318,50 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
     """MinHash-LSH candidate pairs: band the signature, join on
     (band, band_key) buckets, dedup pairs, score by signature
     agreement.  The join key space is tiny vs all-pairs — this is
-    the 100 TB-safe near-dup shape."""
+    the 100 TB-safe near-dup shape.
+
+    ONE pair table per corpus: the table is persisted and memoized
+    per (session, corpus file identity) by :func:`io.memo_persisted`,
+    so every near-dup consumer in a session — curation_pipeline's
+    near-loser leg, connected components, keep-best, the histogram,
+    calibration, b-bit — reads the same materialized pairs instead
+    of re-planning and re-running the banded join (a rebuild costs
+    ~1.0s of jobs plus ~0.8s of driver planning on a 1,000-document
+    corpus, 4 vCPUs).  The
+    memo entry also holds the signature barriers the table is
+    planned over, so a hit after ``clearCache()`` restores them
+    before the table (see :func:`dedup_minhash_signature` for what
+    planning without them costs).
+
+    Partition cap: the persisted table is coalesced to at most
+    ``defaultParallelism`` partitions.  AQE cannot coalesce a cached
+    plan's output (``canChangeCachedPlanOutputPartitioning`` is off),
+    so without the cap every stage over the cache ran one task per
+    shuffle partition — 32-64 one-row tasks per job.  The table is
+    bounded by the near-dup graph (connected components materializes
+    it again in its checkpoint), so at scale the cap only merges
+    partitions past one per core."""
+    import os
+
+    return memo_persisted(
+        _LSH_PAIRS_MEMO, spark, os.path.join(sf_dir, "documents.parquet"),
+        lambda: _lsh_pairs_frames(spark, sf_dir))
+
+
+#: io.memo_persisted memo: (session, corpus file identity) ->
+#: [signature barriers..., persisted pair table].
+_LSH_PAIRS_MEMO: dict = {}
+
+
+def _lsh_pairs_frames(spark, sf_dir) -> list:
+    """Build order of the :func:`dedup_minhash_lsh_pairs` memo entry:
+    the signature barriers, then the pair table planned over them."""
     nh, nb = minhash_params(docs_corpus_size(sf_dir))
     rpb = nh // nb
+    *barriers, sigs = _signature(spark, sf_dir)
     # the signature table feeds three plan branches (banding + both
     # sides of the pair join) — materialize it once, it's tiny
-    sigs = dedup_minhash_signature(spark, sf_dir).cache()
+    sigs = sigs.cache()
     band_cols = [
         F.md5(F.concat_ws("_", *[
             F.col(f"mh{b * rpb + r}").cast("string")
@@ -347,13 +392,15 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
     # plain joins on doc_id: the signature table is corpus-cardinality,
     # so a hardcoded broadcast would OOM at 10B docs — AQE still picks
     # a broadcast build side whenever the table is actually small
-    return (
+    scored = (
         pairs.join(a, pairs.doc_a == F.col("a.doc_id"))
         .join(b, pairs.doc_b == F.col("b.doc_id"))
         .select("doc_a", "doc_b",
                 (agree.cast("double") / nh).alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= 0.5)
     )
+    cap = spark.sparkContext.defaultParallelism
+    return [*barriers, sigs, scored.coalesce(cap).cache()]
 
 
 # ---------------------------------------------------------- simhash

@@ -508,10 +508,13 @@ def sims_ivf_ann(spark, sf_dir):
     the corpus for assignment (map-only argmin per vector — the
     window is per-vector over {CENT_STRIDE}-ish candidate rows, never
     a corpus-wide sort); the cell id then becomes the shuffle key and
-    each reducer scans one cell.  The query sample, by contrast, is
-    corpus-proportional, so the cell join is unhinted (AQE broadcasts
-    it while it fits).  Ties and float drift are pinned by rounding
-    cosines to 6 decimals and breaking by id on both engines."""
+    each reducer scans one cell.  The (vec_id, cell_id) assignment
+    table, by contrast, is corpus-proportional, so its member join is
+    broadcast-hinted only while its estimated size (~48 B/row) fits
+    the heap-derived budget (:func:`io.broadcast_budget_bytes`); past
+    that knee it is a plain shuffled join on vec_id.  Ties and float
+    drift are pinned by rounding cosines to 6 decimals and breaking
+    by id on both engines."""
     from ..io import broadcast_budget_bytes
 
     emb = spread(t(spark, sf_dir, "embeddings"))

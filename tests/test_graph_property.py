@@ -232,3 +232,28 @@ def test_local_and_distributed_schemas_match(spark):
     assert local.schema == dist.schema
     assert ({tuple(r) for r in local.collect()}
             == {tuple(r) for r in dist.collect()})
+
+
+def test_local_labels_typed_from_coerced_ids(spark):
+    """An int ``src`` with a long ``dst`` holding ids past the int
+    range: both operators coerce the endpoints to long, and the
+    local label table must be typed from that coerced column, not
+    from ``src`` — the local and distributed paths give equal labels
+    and equal schemas."""
+    from energi_data_pipeline_spark.operators.graph import (
+        connected_components, connected_components_star)
+
+    big = 1 << 40
+    edges = spark.createDataFrame(
+        [(1, big), (2, big), (3, big + 1), (7, 7), (5, 6)],
+        "src int, dst long")
+    want = {(1, 1), (2, 1), (big, 1), (3, 3), (big + 1, 3),
+            (5, 5), (6, 5), (7, 7)}
+    for cc in (connected_components, connected_components_star):
+        local = cc(edges, "src", "dst")
+        dist = cc(edges, "src", "dst", local_limit=0)
+        assert local.schema == dist.schema, cc.__name__
+        assert dict(local.dtypes) == {"id": "bigint",
+                                      "cluster_id": "bigint"}
+        assert {tuple(r) for r in local.collect()} == want, cc.__name__
+        assert {tuple(r) for r in dist.collect()} == want, cc.__name__
